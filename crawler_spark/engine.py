@@ -22,21 +22,22 @@ This is the Spark re-expression of the reference's four goroutines
          kill the process anywhere; `CrawlEngine.resume()` restarts
          from the last committed epoch (north_rule).
 
-State tables (all catalog-committed): nodes, edges, walks, visits,
-frontier, filters, doc_fps, doc_bands. The last two are the corpus
-content-dedup state (round 5): per admitted batch the engine
-fingerprints + MinHash-signs the page texts ONCE, consults the stored
-tables for exact/near duplicates (partition-pruned, batch side
-broadcast — the corpus text is never re-read or re-shingled), and
-appends the new fingerprints/band keys at commit, mirroring how the
-reference consults-and-updates admission state per event
-(pkg/crawler/process.go:112-117). The exact seen set is `nodes` itself (a url is
-"seen" once it has a node id, exactly like the reference's keyIndex
-membership); the bucketed bloom `filters` table is maintained
-INCREMENTALLY — only buckets that gained urls are rewritten per batch
-(seen.update_seen_filters), which is what makes the approximate layer
-affordable at a 10^10 frontier where a full rebuild would rescan
-everything every epoch.
+State tables: every catalog-committed table is declared once, in
+`_TABLES` below, with its bucket key, its delta anti-join keys and
+(for the content-dedup sketches) its empty schema. doc_fps, doc_bands
+and doc_lines are the corpus content-dedup state (round 5): per
+admitted batch the engine fingerprints + MinHash-signs the page texts
+ONCE, consults the stored tables for exact/near duplicates
+(partition-pruned, batch side broadcast — the corpus text is never
+re-read or re-shingled), and appends the new fingerprints/band keys
+at commit, mirroring how the reference consults-and-updates admission
+state per event (pkg/crawler/process.go:112-117). The exact seen set
+is `nodes` itself (a url is "seen" once it has a node id, exactly
+like the reference's keyIndex membership); the bucketed bloom
+`filters` table is maintained INCREMENTALLY — only buckets that
+gained urls are rewritten per batch (seen.update_seen_filters), which
+is what makes the approximate layer affordable at a 10^10 frontier
+where a full rebuild would rescan everything every epoch.
 
 The `visits` table is the MAINTAINED inverted walk index
 (node_id, walk_id) — the reference's walksVisiting:<id> sets, updated
@@ -51,8 +52,8 @@ lastWalkID are tracked incrementally on the engine like the
 reference's RWS counters (store.go:129-145) — no per-epoch
 full-store aggregation anywhere in the loop.
 
-Commits are DELTA-COMPOSED for walks/visits/edges/nodes: the epoch
-registers (remove-keys, add-rows) pairs per table, and the commit
+Commits are DELTA-COMPOSED for every table with delta keys: the epoch
+stages (remove-keys, add-rows) pairs per table, and the commit
 rebuilds only the dirty buckets from the previous snapshot's pruned
 partitions plus those deltas — the logical full-table DataFrames are
 never scanned at commit time, so a delta batch commits in
@@ -62,8 +63,9 @@ O(|dirty buckets| + |delta|), not O(|store|).
 from __future__ import annotations
 
 import datetime as _dt
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import frontier as frontier_mod
@@ -72,35 +74,61 @@ from .catalog import Catalog
 from .functions.extract import extract_links, is_valid_url
 from .session import pin_active_session
 
-TABLES = (
-    "nodes",
-    "edges",
-    "walks",
-    "visits",
-    "frontier",
-    "filters",
-    "doc_fps",
-    "doc_bands",
-    "doc_lines",
-)
-
-# anti-join keys for delta-composed partial commits, per table
-_PENDING_KEYS = {
-    "walks": ["walk_id"],
-    "visits": ["node_id", "walk_id"],
-    "edges": ["src", "dst"],
-    "nodes": ["node_id"],
-    "doc_fps": ["fp"],
-    "doc_bands": ["doc_id", "band", "key"],
-    "doc_lines": ["fp"],
-}
-
 # content-dedup state table schemas (sign-at-admission corpus side of
 # ops.dedup.incremental_exact_dedup / incremental_lsh_pairs /
 # incremental_line_dedup)
 _DOC_FPS_SCHEMA = "fp string, keeper_id long"
 _DOC_BANDS_SCHEMA = "doc_id long, band int, key string"
 _DOC_LINES_SCHEMA = "fp string, n_docs long"
+
+
+class _Table(NamedTuple):
+    """How one committed table commits.
+
+    bucket: engine -> the bucket column expression, built at commit
+        time from the engine's n_table_buckets / n_buckets; None when
+        the frame carries its own `bucket` column (filters).
+    keys: the columns a staged remove-frame anti-joins on when the
+        commit composes dirty buckets from the previous snapshot;
+        None when the table never stages deltas.
+    schema: the empty table a content-dedup sketch starts from (these
+        start empty and are only ever appended/merged); None for
+        tables bootstrap derives."""
+
+    bucket: Callable[[CrawlEngine], Column] | None
+    keys: tuple[str, ...] | None = None
+    schema: str | None = None
+
+
+# every committed table, in commit-submission order
+_TABLES = {
+    # nodes bucket by the SAME host-hash as the filters, so the
+    # minted-url touched set drives both partial commits
+    "nodes": _Table(
+        lambda e: seen.url_bucket(F.col("url"), e.n_buckets), ("node_id",)
+    ),
+    "edges": _Table(lambda e: e._bucket_of("src"), ("src", "dst")),
+    "walks": _Table(lambda e: e._bucket_of("walk_id"), ("walk_id",)),
+    "visits": _Table(
+        lambda e: e._bucket_of("node_id"), ("node_id", "walk_id")
+    ),
+    # frontier buckets by host hash; per epoch only the scheduled
+    # batch's hosts (and newly enqueued urls' hosts) change state
+    "frontier": _Table(lambda e: e._host_bucket()),
+    "filters": _Table(None),
+    "doc_fps": _Table(
+        lambda e: e._bucket_of_str("fp"), ("fp",), _DOC_FPS_SCHEMA
+    ),
+    "doc_bands": _Table(
+        lambda e: e._bucket_of_str("key"),
+        ("doc_id", "band", "key"),
+        _DOC_BANDS_SCHEMA,
+    ),
+    "doc_lines": _Table(
+        lambda e: e._bucket_of_str("fp"), ("fp",), _DOC_LINES_SCHEMA
+    ),
+}
+_DEDUP_TABLES = tuple(n for n, t in _TABLES.items() if t.schema)
 
 
 class CrawlEngine:
@@ -142,17 +170,12 @@ class CrawlEngine:
         self.total_visits = 0
         self.next_walk_id = 0
         self.next_node_id = 0
-        # bucket-level commit tracking: None => full snapshot rewrite
-        # (bootstrap / arbiter restructure); a set => only those
-        # buckets are written, the rest hardlink from the previous
-        # snapshot (catalog.write_partial). walks/edges bucket by
-        # pmod(xxhash64(key), n_table_buckets); filters already carry
-        # their host-hash bucket column.
+        # bucket-level commit tracking, per _TABLES entry: None => full
+        # snapshot rewrite (bootstrap / arbiter restructure); a set =>
+        # only those buckets are written, the rest hardlink from the
+        # previous snapshot (catalog.write_partial)
         self.n_table_buckets = 64
-        self._walks_dirty: set[int] | None = None
-        self._edges_dirty: set[int] | None = None
-        self._filters_dirty: set[int] | None = None
-        self._visits_dirty: set[int] | None = None
+        self._dirty: dict[str, set[int] | None] = dict.fromkeys(_TABLES)
         # delta-composed commit inputs: table -> [(remove_df, add_df)]
         # applied in order onto the previous snapshot's dirty buckets
         self._pending: dict[str, list] = {}
@@ -170,12 +193,6 @@ class CrawlEngine:
         # per-table parquet schema cache (schemas are fixed; see
         # _read_snapshot)
         self._snap_schemas: dict = {}
-        # nodes bucket by the SAME host-hash as the filters, so the
-        # minted-url touched set drives both partial commits
-        self._nodes_dirty: set[int] | None = None
-        # frontier buckets by host hash; per epoch only the scheduled
-        # batch's hosts (and newly enqueued urls' hosts) change state
-        self._frontier_dirty: set[int] | None = None
         self.nodes: DataFrame | None = None
         self.edges: DataFrame | None = None
         self.walks: DataFrame | None = None
@@ -203,9 +220,6 @@ class CrawlEngine:
         # keepers), so duplicates never inflate line stats and the
         # table equals line_corpus_counts over the corpus keepers
         self.doc_lines: DataFrame | None = None
-        self._doc_fps_dirty: set[int] | None = None
-        self._doc_bands_dirty: set[int] | None = None
-        self._doc_lines_dirty: set[int] | None = None
         # tables rolled back by resume's cross-table reconciliation
         self.last_resume_rollback: list[str] = []
 
@@ -249,9 +263,8 @@ class CrawlEngine:
             self.nodes.select("url"), n_buckets=self.n_buckets
         )
         if self.dedup_state:
-            self.doc_fps = spark.createDataFrame([], _DOC_FPS_SCHEMA)
-            self.doc_bands = spark.createDataFrame([], _DOC_BANDS_SCHEMA)
-            self.doc_lines = spark.createDataFrame([], _DOC_LINES_SCHEMA)
+            for name in _DEDUP_TABLES:
+                self._start_empty(name)
         self.epoch = 0
         # the one-time bootstrap scans that seed the incremental
         # counters (every later epoch maintains them from deltas)
@@ -283,28 +296,25 @@ class CrawlEngine:
             df = self._read_snapshot(name, cur.path)
         else:
             df = self.cat.read(self.spark, name)
-        if (
-            name
-            in (
-                "walks",
-                "edges",
-                "nodes",
-                "frontier",
-                "visits",
-                "doc_fps",
-                "doc_bands",
-                "doc_lines",
-            )
-            and "bucket" in df.columns
-        ):
-            df = df.drop("bucket")
-        if name == "filters":
-            # partition col comes back as int and reordered — restore
-            # the declared schema shape
+        if _TABLES[name].bucket is None:
+            # a frame that carries its own bucket column (filters): the
+            # partition col comes back as int and last — restore the
+            # declared schema shape
             df = df.select(
-                F.col("bucket").cast("long"), "n_items", "m_bits", "bits"
+                F.col("bucket").cast("long"),
+                *(c for c in df.columns if c != "bucket"),
             )
+        elif "bucket" in df.columns:
+            df = df.drop("bucket")
         return df
+
+    def _start_empty(self, name: str) -> None:
+        """Start a content-dedup sketch as an empty table, committed in
+        full next time."""
+        setattr(
+            self, name, self.spark.createDataFrame([], _TABLES[name].schema)
+        )
+        self._dirty[name] = None
 
     def _snapshot_capped(self, name: str, epoch: int):
         """Latest snapshot of `name` with epoch <= `epoch`. Raises
@@ -362,6 +372,7 @@ class CrawlEngine:
             chosen[name] = snap
             setattr(self, name, self._load(name, snap))
             self._snap_frames[name] = getattr(self, name)
+            self._dirty[name] = set()
         cur_nodes = chosen["nodes"]
         self.epoch = cur_nodes.epoch
         # counters from the manifest (metadata, no scan): |edges| and
@@ -413,17 +424,13 @@ class CrawlEngine:
             self.visits = self._load("visits", vsnap)
             self._snap_frames["visits"] = self.visits
             self.total_visits = vsnap.n_rows
-            self._visits_dirty = set()
+            self._dirty["visits"] = set()
         else:
             # pre-index snapshot: derive once and commit next epoch
             self.visits = walks_gen.visits_of(self.walks)
             self.total_visits = walks_gen.total_visits(self.walks)
-            self._visits_dirty = None  # full write on next commit
-        for name, schema, attr in (
-            ("doc_fps", _DOC_FPS_SCHEMA, "_doc_fps_dirty"),
-            ("doc_bands", _DOC_BANDS_SCHEMA, "_doc_bands_dirty"),
-            ("doc_lines", _DOC_LINES_SCHEMA, "_doc_lines_dirty"),
-        ):
+            self._dirty["visits"] = None  # full write on next commit
+        for name in _DEDUP_TABLES:
             snap = _aux_capped(name)
             if snap is not None and name == "doc_bands":
                 # stored signatures are only consultable under the
@@ -449,16 +456,13 @@ class CrawlEngine:
             if snap is not None:
                 setattr(self, name, self._load(name, snap))
                 self._snap_frames[name] = getattr(self, name)
-                setattr(self, attr, set())
+                self._dirty[name] = set()
             elif self.dedup_state:
                 # pre-dedup-state store (or torn first adoption):
                 # start fresh (full write next commit) — the sketch
                 # is monotone, so late adoption only means earlier
                 # content isn't consulted, never wrong dups
-                setattr(
-                    self, name, self.spark.createDataFrame([], schema)
-                )
-                setattr(self, attr, None)
+                self._start_empty(name)
         self.last_resume_rollback.sort()
         nid = cur_nodes.metrics.get("next_walk_id")
         self.next_walk_id = (
@@ -476,11 +480,6 @@ class CrawlEngine:
         else:  # pre-counter snapshot: one-time scan
             prev = self.nodes.agg(F.max("node_id")).first()[0]
             self.next_node_id = (prev if prev is not None else -1) + 1
-        self._walks_dirty = set()
-        self._edges_dirty = set()
-        self._filters_dirty = set()
-        self._nodes_dirty = set()
-        self._frontier_dirty = set()
         self._pending = {}
         self._snap_reads = {}
 
@@ -509,30 +508,36 @@ class CrawlEngine:
             F.xxhash64(F.col(key_col)), F.lit(self.n_table_buckets)
         ).cast("int")
 
-    def _mark_dirty(self, attr: str, buckets) -> None:
-        cur = getattr(self, attr)
-        if cur is not None:  # None already means full rewrite
-            cur.update(int(b) for b in buckets)
-
-    def _pend(self, name: str, remove: DataFrame | None, add: DataFrame | None) -> None:
-        """Register a delta-composed commit input for `name`: at
-        commit time the dirty buckets are rebuilt from the previous
-        snapshot's pruned partitions anti-joined with `remove` (on the
-        table's key) and unioned with `add` — the logical full-table
-        DataFrame is never scanned. Callers pass delta-sized,
-        already-materialized frames."""
-        self._pending.setdefault(name, []).append((remove, add))
+    def _stage(
+        self,
+        name: str,
+        buckets,
+        remove: DataFrame | None = None,
+        add: DataFrame | None = None,
+    ) -> None:
+        """Mark `buckets` of `name` dirty and, when given, register a
+        delta-composed commit input: at commit time the dirty buckets
+        are rebuilt from the previous snapshot's pruned partitions
+        anti-joined with `remove` (on the table's keys) and unioned
+        with `add` — the logical full-table DataFrame is never
+        scanned. Callers pass delta-sized, already-materialized
+        frames."""
+        dirty = self._dirty[name]
+        if dirty is not None:  # None already means full rewrite
+            dirty.update(int(b) for b in buckets)
+        if remove is not None or add is not None:
+            self._pending.setdefault(name, []).append((remove, add))
 
     def _commit(self, now: _dt.datetime, extra: dict | None = None) -> None:
-        """Snapshot every table. walks/visits/edges/filters commit at
-        BUCKET granularity: only buckets the epoch touched are
-        written, the rest hardlink from the previous version (the
-        Iceberg overwrite-by-partition shape) — at a 10^12-row walk
-        store this is the difference between committing the delta and
-        rewriting 100 TB per epoch. Tables with registered pending
-        deltas compose the dirty buckets' content from the previous
-        snapshot (partition-pruned read) + the delta rows, so the
-        commit never evaluates the full logical state either."""
+        """Snapshot every table in `_TABLES` at BUCKET granularity:
+        only buckets the epoch touched are written, the rest hardlink
+        from the previous version (the Iceberg overwrite-by-partition
+        shape) — at a 10^12-row walk store this is the difference
+        between committing the delta and rewriting 100 TB per epoch.
+        Tables with staged deltas compose the dirty buckets' content
+        from the previous snapshot (partition-pruned read) + the delta
+        rows, so the commit never evaluates the full logical state
+        either."""
         m = {
             "epoch": self.epoch,
             "walks_changed": self.walks_changed,
@@ -548,123 +553,71 @@ class CrawlEngine:
         }
         if extra:
             m.update(extra)
-        bucketed = {
-            "walks": (self._bucket_of("walk_id"), self._walks_dirty),
-            "visits": (self._bucket_of("node_id"), self._visits_dirty),
-            "edges": (self._bucket_of("src"), self._edges_dirty),
-            "filters": (None, self._filters_dirty),
-            "nodes": (
-                seen.url_bucket(F.col("url"), self.n_buckets),
-                self._nodes_dirty,
-            ),
-            "frontier": (self._host_bucket(), self._frontier_dirty),
-            "doc_fps": (self._bucket_of_str("fp"), self._doc_fps_dirty),
-            "doc_bands": (self._bucket_of_str("key"), self._doc_bands_dirty),
-            "doc_lines": (self._bucket_of_str("fp"), self._doc_lines_dirty),
-        }
+
         def _commit_one(name: str, df: DataFrame) -> None:
             # pool threads build plans (withColumn/filter/union) and
             # run write actions on fresh py4j-paired JVM threads —
             # pin the active-session thread-local first (see
             # session.pin_active_session for the resetMetrics NPE)
             pin_active_session(self.spark)
-            if name in bucketed:
-                expr, dirty = bucketed[name]
-                partial = dirty is not None and self.cat.current(name) is not None
-                if partial and self._pending.get(name):
-                    base = self._read_snapshot(
-                        name, self.cat.current(name).path
-                    )
-                    part = base.filter(
-                        F.col("bucket").isin(sorted(dirty))
-                    ).drop("bucket")
-                    for rm, add in self._pending[name]:
-                        if rm is not None:
-                            # no forced broadcast: deltas are usually
-                            # tiny (AQE broadcasts them at runtime)
-                            # but a mass removal must not OOM the
-                            # driver
-                            part = part.join(
-                                rm, _PENDING_KEYS[name], "left_anti"
-                            )
-                        if add is not None:
-                            part = part.unionByName(add)
-                    dfb = part.withColumn("bucket", expr)
-                    snap = self.cat.write_partial(
-                        name, dfb, sorted(dirty), epoch=self.epoch, metrics=m
-                    )
-                elif partial:
-                    dfb = (
-                        df.withColumn("bucket", expr)
-                        if expr is not None
-                        else df
-                    )
-                    snap = self.cat.write_partial(
-                        name, dfb, sorted(dirty), epoch=self.epoch, metrics=m
-                    )
-                else:
-                    dfb = (
-                        df.withColumn("bucket", expr)
-                        if expr is not None
-                        else df
-                    )
-                    snap = self.cat.write(
-                        name, dfb, epoch=self.epoch,
-                        partition_by=["bucket"], metrics=m,
-                    )
+            table = _TABLES[name]
+            dirty = self._dirty[name]
+            cur = self.cat.current(name)
+            partial = dirty is not None and cur is not None
+            if partial and self._pending.get(name):
+                # compose the dirty buckets from the previous snapshot
+                # plus the staged deltas, never the in-memory frame
+                df = (
+                    self._read_snapshot(name, cur.path)
+                    .filter(F.col("bucket").isin(sorted(dirty)))
+                    .drop("bucket")
+                )
+                for rm, add in self._pending[name]:
+                    if rm is not None:
+                        # no forced broadcast: deltas are usually
+                        # tiny (AQE broadcasts them at runtime) but a
+                        # mass removal must not OOM the driver
+                        df = df.join(rm, list(table.keys), "left_anti")
+                    if add is not None:
+                        df = df.unionByName(add)
+            if table.bucket is not None:
+                df = df.withColumn("bucket", table.bucket(self))
+            if partial:
+                self.cat.write_partial(
+                    name, df, sorted(dirty), epoch=self.epoch, metrics=m
+                )
             else:
-                snap = self.cat.write(name, df, epoch=self.epoch, metrics=m)
+                self.cat.write(
+                    name, df, epoch=self.epoch,
+                    partition_by=["bucket"], metrics=m,
+                )
             # re-read from the committed snapshot: truncates lineage
             # (the iterative-Spark pitfall) and makes the in-memory
             # state exactly the on-disk state
             setattr(self, name, self._load(name))
             self._snap_frames[name] = getattr(self, name)
-            return snap
 
-        # the six table commits are INDEPENDENT Spark actions over
+        # the table commits are INDEPENDENT Spark actions over
         # disjoint state (separate manifest files, separate version
         # dirs) — run them concurrently so their fixed per-action
         # scheduling latencies overlap instead of summing (the
         # reference commits via concurrent goroutines for the same
         # reason, cmd/crawler.go:89-141); measured ~2x on the commit
-        # phase of a small delta epoch
+        # phase of a small delta epoch. A table whose frame was never
+        # initialized (the dedup-state tables of a standalone
+        # process_pages caller with dedup_state=False) is skipped.
         from concurrent.futures import ThreadPoolExecutor
 
-        to_commit = [
-            ("nodes", self.nodes),
-            ("edges", self.edges),
-            ("walks", self.walks),
-            ("visits", self.visits),
-            ("frontier", self.frontier),
-            ("filters", self.filters),
-        ]
-        # the dedup-state tables commit alongside the rest whenever
-        # they exist (bootstrap/resume initialize them; a standalone
-        # process_pages caller with dedup_state=False never does)
-        if self.doc_fps is not None:
-            to_commit.append(("doc_fps", self.doc_fps))
-        if self.doc_bands is not None:
-            to_commit.append(("doc_bands", self.doc_bands))
-        if self.doc_lines is not None:
-            to_commit.append(("doc_lines", self.doc_lines))
         with ThreadPoolExecutor(max_workers=8) as pool:
-            futures = [
-                pool.submit(_commit_one, name, df) for name, df in to_commit
-            ]
-            for f in futures:
+            futures = {
+                name: pool.submit(_commit_one, name, df)
+                for name in _TABLES
+                if (df := getattr(self, name)) is not None
+            }
+            for f in futures.values():
                 f.result()
-        self._walks_dirty = set()
-        self._edges_dirty = set()
-        self._filters_dirty = set()
-        self._nodes_dirty = set()
-        self._frontier_dirty = set()
-        self._visits_dirty = set()
-        if self.doc_fps is not None:
-            self._doc_fps_dirty = set()
-        if self.doc_bands is not None:
-            self._doc_bands_dirty = set()
-        if self.doc_lines is not None:
-            self._doc_lines_dirty = set()
+        for name in futures:
+            self._dirty[name] = set()
         self._pending = {}
         # snapshot paths are versioned: superseded reads never hit
         # again, so drop them rather than accumulate one per epoch
@@ -696,13 +649,13 @@ class CrawlEngine:
         if robots is not None or robots_rules is not None:
             # robots may flip arbitrary queued rows to 'blocked' —
             # conservatively commit the frontier in full
-            self._frontier_dirty = None
+            self._dirty["frontier"] = None
         # one action: scheduled count AND the frontier dirty buckets
         # (hosts of state-flipped rows)
         brows = (
             batch.groupBy(self._host_bucket().alias("b")).count().collect()
         )
-        self._mark_dirty("_frontier_dirty", (r["b"] for r in brows))
+        self._stage("frontier", (r["b"] for r in brows))
         fetched = web.join(batch.select("url"), "url", "left_semi")
         stats = self.process_pages(fetched, now)
         stats.update(self.maybe_arbiter(now))
@@ -812,12 +765,12 @@ class CrawlEngine:
             self.filters = seen.build_seen_filters(
                 self.nodes.select("url"), n_buckets=self.n_buckets
             )
-            self._filters_dirty = None  # fresh build -> full snapshot
+            self._dirty["filters"] = None  # fresh build -> full snapshot
         if self.visits is None:
             # standalone caller without bootstrap/resume: derive the
             # index + counters once (every later batch maintains them)
             self.visits = walks_gen.visits_of(self.walks)
-            self._visits_dirty = None
+            self._dirty["visits"] = None
             self.total_visits = walks_gen.total_visits(self.walks)
             self.next_walk_id = walks_gen.next_walk_id(self.walks)
         if self.next_node_id == 0:
@@ -833,7 +786,7 @@ class CrawlEngine:
         # the snapshot's bucket partitions — the driver never holds
         # the blob set (12.5 GB at a 10^10-URL frontier)
         fpath = None
-        if self._filters_dirty is not None and not self._filters_dirty:
+        if self._dirty["filters"] == set():
             cur = self.cat.current("filters")
             fpath = cur.path if cur else None
         # eager=False + release: checkpoint MINTED (not the admitted
@@ -904,13 +857,12 @@ class CrawlEngine:
                 filters_path=fpath,
                 add_counts=add_counts,
             )
-            self._mark_dirty("_filters_dirty", touched)
-            self._mark_dirty("_nodes_dirty", touched)
-            # register the mint for the delta-composed commit too: if
-            # the SAME epoch later pends node deltas (an arbiter flip),
+            self._stage("filters", touched)
+            # stage the mint for the delta-composed commit too: if the
+            # SAME epoch later stages node deltas (an arbiter flip),
             # the commit rebuilds dirty buckets from snapshot+pendings
             # and would otherwise drop rows that exist only in memory
-            self._pend("nodes", None, minted)
+            self._stage("nodes", touched, add=minted)
             self.nodes = self.nodes.unionByName(minted)
 
         # new follow lists for EVERY fetched author (active AND
@@ -1023,9 +975,9 @@ class CrawlEngine:
         if n_deltas:
             self.n_edges += sum(int(r["na"]) - int(r["nr"]) for r in drows)
             delta_buckets = sorted(int(r["b"]) for r in drows)
-            self._mark_dirty("_edges_dirty", delta_buckets)
-            self._pend(
+            self._stage(
                 "edges",
+                delta_buckets,
                 deltas.select(
                     F.col("node_id").alias("src"),
                     F.explode("removed").alias("dst"),
@@ -1086,12 +1038,9 @@ class CrawlEngine:
                 .collect()
             )
             n_up = sum(int(r["n"]) for r in _urows if int(r["k"]) == 0)
-            self._mark_dirty(
-                "_walks_dirty",
-                (r["b"] for r in _urows if int(r["k"]) == 0),
-            )
-            self._pend(
+            self._stage(
                 "walks",
+                (r["b"] for r in _urows if int(r["k"]) == 0),
                 upd.select("walk_id"),
                 upd.select("walk_id", "start_id", "path"),
             )
@@ -1135,19 +1084,9 @@ class CrawlEngine:
         # dedup stats cover content-bearing docs only.
         docs = docs.filter(F.col("text").isNotNull())
 
-        if self.doc_fps is None:
-            self.doc_fps = self.spark.createDataFrame([], _DOC_FPS_SCHEMA)
-            self._doc_fps_dirty = None  # fresh table -> full write
-        if self.doc_bands is None:
-            self.doc_bands = self.spark.createDataFrame(
-                [], _DOC_BANDS_SCHEMA
-            )
-            self._doc_bands_dirty = None
-        if self.doc_lines is None:
-            self.doc_lines = self.spark.createDataFrame(
-                [], _DOC_LINES_SCHEMA
-            )
-            self._doc_lines_dirty = None
+        for name in _DEDUP_TABLES:
+            if getattr(self, name) is None:
+                self._start_empty(name)
         # ---- exact side: batch fingerprints, doc-level (for the
         # keeper-identity check below), rolled up per fp (the
         # within-batch keeper = min doc_id, matching exact_dedup);
@@ -1318,16 +1257,16 @@ class CrawlEngine:
         n_line_fps = sum(
             int(r["count"]) for r in _vrows if int(r["k"]) == 2
         )
-        self._mark_dirty(
-            "_doc_fps_dirty",
+        self._stage(
+            "doc_fps",
             (int(r["b"]) for r in _urows if int(r["k"]) == 0),
+            add=new_fps,
         )
-        self._mark_dirty(
-            "_doc_bands_dirty",
+        self._stage(
+            "doc_bands",
             (int(r["b"]) for r in _vrows if int(r["k"]) == 1),
+            add=nb_new,
         )
-        self._pend("doc_fps", None, new_fps)
-        self._pend("doc_bands", None, nb_new)
         self.doc_fps = self.doc_fps.unionByName(new_fps)
         self.doc_bands = self.doc_bands.unionByName(nb_new)
         if line_buckets:
@@ -1357,8 +1296,9 @@ class CrawlEngine:
                 )
                 .localCheckpoint(eager=False)
             )
-            self._mark_dirty("_doc_lines_dirty", line_buckets)
-            self._pend("doc_lines", hits_l.select("fp"), merged)
+            self._stage(
+                "doc_lines", line_buckets, hits_l.select("fp"), merged
+            )
             self.doc_lines = self.doc_lines.join(
                 blc.select("fp"), "fp", "left_anti"
             ).unionByName(merged)
@@ -1404,9 +1344,9 @@ class CrawlEngine:
             ]
         elif vis_rm is None and vis_add is None:
             return 0
-        self._mark_dirty("_visits_dirty", (b for b, _ in bucket_rows))
-        self._pend(
+        self._stage(
             "visits",
+            (b for b, _ in bucket_rows),
             vis_rm.select("node_id", "walk_id") if vis_rm is not None else None,
             vis_add.select("node_id", "walk_id") if vis_add is not None else None,
         )
@@ -1431,7 +1371,7 @@ class CrawlEngine:
         epoch's nodes/edges/visits lookups O(|touched buckets|)
         instead of O(|store|) — the DataFrame re-expression of the
         reference's keyIndex point reads (database.go:179-210)."""
-        dirty = getattr(self, f"_{name}_dirty")
+        dirty = self._dirty[name]
         if dirty is None or dirty or self._pending.get(name):
             return None
         if getattr(self, name, None) is not self._snap_frames.get(name):
@@ -1527,8 +1467,10 @@ class CrawlEngine:
                 .select("node_id")
                 .localCheckpoint(eager=True)
             )
-            self._mark_dirty("_nodes_dirty", delta["node_buckets"] or [])
-            self._pend("nodes", flipped_ids, flipped_new)
+            self._stage(
+                "nodes", delta["node_buckets"] or [], flipped_ids, flipped_new
+            )
+            walk_buckets = []
             for wdf, is_add in ((removed, False), (added, True)):
                 if wdf is None:
                     continue
@@ -1537,14 +1479,15 @@ class CrawlEngine:
                     .agg(F.max("walk_id").alias("mx"))
                     .collect()
                 )
-                self._mark_dirty("_walks_dirty", (r["b"] for r in rows))
+                walk_buckets.extend(r["b"] for r in rows)
                 if is_add and rows:
                     self.next_walk_id = max(
                         self.next_walk_id,
                         max(int(r["mx"]) for r in rows) + 1,
                     )
-            self._pend(
+            self._stage(
                 "walks",
+                walk_buckets,
                 removed.select("walk_id") if removed is not None else None,
                 added,
             )
@@ -1566,8 +1509,8 @@ class CrawlEngine:
             # seen.url_bucket == pmod(xxhash64(host(url)), B) — the
             # SAME definition _host_bucket applies to the frontier's
             # host column at commit time (one definition, two spots)
-            self._mark_dirty(
-                "_frontier_dirty",
+            self._stage(
+                "frontier",
                 (
                     r["b"]
                     for r in promoted.select(

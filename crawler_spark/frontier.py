@@ -105,18 +105,6 @@ def enqueue(
     return frontier.unionByName(new)
 
 
-def refresh_priorities(frontier: DataFrame, scores: DataFrame) -> DataFrame:
-    """Priority = current pagerank mass (W3: the arbiter's promotion
-    pressure becomes the queue key). Unknown nodes keep priority 0."""
-    return (
-        frontier.join(
-            scores.select("node_id", F.col("rank").alias("_rank")), "node_id", "left"
-        )
-        .withColumn("priority", F.coalesce("_rank", "priority"))
-        .drop("_rank")
-    )
-
-
 def schedule_batch(
     frontier: DataFrame,
     robots: DataFrame | None,

@@ -256,8 +256,8 @@ def url_filter(
     blocklist). The match runs at HOST granularity: the batch's
     distinct lowercased hosts explode into their suffix sets
     (~4 rows/host), semi-join the broadcast lowercased blocklist,
-    and the resulting blocked-host dimension broadcasts back onto
-    the urls — the frontier itself is never shuffled, and the
+    and the resulting blocked-host dimension joins back onto the
+    urls — AQE broadcasts it at runtime when it is small, and the
     intermediate is bounded by the batch's host count, not its url
     count."""
     host = F.lower(url_host(F.col(url_col)))
@@ -281,7 +281,9 @@ def url_filter(
             .distinct()
             .withColumn("_blk", F.lit(True))
         )
-        out = out.join(F.broadcast(bhosts), "_host", "left").withColumn(
+        # no forced broadcast: bhosts is data-dependent (every batch
+        # host can be blocked), so AQE picks the strategy at runtime
+        out = out.join(bhosts, "_host", "left").withColumn(
             "_blocked", F.coalesce(F.col("_blk"), F.lit(False))
         ).drop("_blk")
     else:

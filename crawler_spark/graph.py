@@ -130,13 +130,6 @@ def nodes_from_urls(
     return mint_node_ids(None, df, status=status, added_ts=added_ts)
 
 
-def edges_from_follow_lists(follow_lists: DataFrame) -> DataFrame:
-    """(node_id, follows: array<long>) -> (src, dst) edge rows."""
-    return follow_lists.select(
-        F.col("node_id").alias("src"), F.explode("follows").alias("dst")
-    )
-
-
 def adjacency_lists(edges: DataFrame) -> DataFrame:
     """J2 bulk Follows: (src, follows: array<long> SORTED).
 

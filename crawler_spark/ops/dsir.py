@@ -81,14 +81,6 @@ def _features_from_tokens(ts: Column, n_buckets: int) -> Column:
     )
 
 
-def hashed_ngram_features(text: Column, n_buckets: int) -> Column:
-    """Array of hashed unigram+bigram bucket ids of `text`.  Tokens
-    are the corpus-wide [a-z0-9]+ convention; bigrams the space-
-    joined consecutive pairs.  Thin text-level wrapper — hot paths
-    project the token array first (see _features_from_tokens)."""
-    return _features_from_tokens(_tokens_arr(text), n_buckets)
-
-
 def doc_bucket_counts(
     docs: DataFrame,
     n_buckets: int,

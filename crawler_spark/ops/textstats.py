@@ -398,13 +398,6 @@ def _ngrams_from_tokens(toks: Column, n: int) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
 
-def _ngrams_arr(text: Column, n: int) -> Column:
-    """Text-level wrapper of _ngrams_from_tokens (tokens by the
-    corpus-wide [a-z0-9]+ convention); hot paths project the token
-    array first."""
-    return _ngrams_from_tokens(_tokens_arr(text), n)
-
-
 def top_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
     """Gopher top-n-gram signal (Rae et al. 2021 A1.1, n in {2,3,4}):
     fraction of the doc's content characters contained in the single
@@ -446,11 +439,6 @@ def top_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
     return F.coalesce(frac, F.lit(0.0)).cast("double")
 
 
-def top_ngram_char_frac_expr(text: Column, n: int) -> Column:
-    """Text-level wrapper of top_ngram_char_frac_from_tokens."""
-    return top_ngram_char_frac_from_tokens(_tokens_arr(text), n)
-
-
 def dup_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
     """Gopher duplicate-n-gram signal (A1.1, n in {5..10}), under this
     repo's excess-occurrence convention (the dup_line_char_frac
@@ -481,11 +469,6 @@ def dup_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
         F.least(F.lit(1.0), res["excess"] / total)
     )
     return F.coalesce(frac, F.lit(0.0)).cast("double")
-
-
-def dup_ngram_char_frac_expr(text: Column, n: int) -> Column:
-    """Text-level wrapper of dup_ngram_char_frac_from_tokens."""
-    return dup_ngram_char_frac_from_tokens(_tokens_arr(text), n)
 
 
 def ngram_repetition_stats(
@@ -635,7 +618,7 @@ def c4_filters(
       has >= min_line_words whitespace words, and does not mention
       'javascript' (C4 drops cookie/JS-warning boilerplate lines);
       doc level — drop any page containing 'lorem ipsum'
-      (placeholder text), a '{' (source code), a blocklisted word
+      (placeholder text), a '{' or '}' (source code), a blocklisted word
       (token-exact match on the corpus [a-z0-9]+ convention; C4 used
       a public profanity list — pass your own), or fewer than
       min_lines surviving lines.
@@ -677,7 +660,10 @@ def c4_filters(
         blocked = F.lit(False)
     reason = (
         F.when(F.coalesce(lt.contains("lorem ipsum"), F.lit(False)), F.lit("lorem_ipsum"))
-        .when(F.coalesce(t.contains("{"), F.lit(False)), F.lit("brace"))
+        .when(
+            F.coalesce(t.contains("{") | t.contains("}"), F.lit(False)),
+            F.lit("brace"),
+        )
         .when(F.coalesce(blocked, F.lit(False)), F.lit("blocklist"))
         .when(n_kept < min_lines, F.lit("too_few_lines"))
     )

@@ -74,7 +74,7 @@ def _run_epochs(eng, web, n, start=0):
             tick_seconds=eng.tick_seconds,
             batch_size=eng.batch_size,
         )
-        eng._frontier_dirty = None  # mutated outside run_epoch
+        eng._dirty["frontier"] = None  # mutated outside run_epoch
         urls = [r.url for r in batch.select("url").collect()]
         ingested.append(sorted(urls))
         eng.epoch += 1
@@ -398,7 +398,7 @@ def test_resume_survives_torn_first_adoption(spark, tmp_path):
     eng2.resume()  # must not raise
     assert "doc_fps" in eng2.last_resume_rollback
     assert eng2.cat.current("doc_fps") is None
-    assert eng2.doc_fps.count() == 0 and eng2._doc_fps_dirty is None
+    assert eng2.doc_fps.count() == 0 and eng2._dirty["doc_fps"] is None
 
 
 def test_recrawled_keeper_is_not_its_own_duplicate(spark, tmp_path):
@@ -416,11 +416,11 @@ def test_recrawled_keeper_is_not_its_own_duplicate(spark, tmp_path):
     n1 = docs1.count()
     assert s1["docs"] == n1 and s1["dup_exact"] == 0
 
-    bands_dirty_before = set(eng._doc_bands_dirty or ())
+    bands_dirty_before = set(eng._dirty["doc_bands"] or ())
     s2 = eng._ingest_dedup_state(docs1)
     assert s2["docs"] == n1
     assert s2["dup_exact"] == 0  # every doc IS its stored keeper
-    assert set(eng._doc_bands_dirty or ()) == bands_dirty_before
+    assert set(eng._dirty["doc_bands"] or ()) == bands_dirty_before
 
     # a genuinely new doc with a KNOWN fp (keeper not in batch) is
     # still a dup
@@ -458,7 +458,7 @@ def test_resume_rederives_visits_torn_behind_anchor(spark, tmp_path):
     eng2 = _mk(spark, root)
     eng2.resume()
     assert "visits" in eng2.last_resume_rollback
-    assert eng2._visits_dirty is None  # full write on next commit
+    assert eng2._dirty["visits"] is None  # full write on next commit
     assert _rows(eng2.visits) == expected
     assert eng2.total_visits == total
 

@@ -48,7 +48,7 @@ def _run(spark, tmp_path, name, epochs=4):
         )
         # this loop mutates the frontier outside run_epoch's dirty
         # tracking -> commit it in full
-        eng._frontier_dirty = None
+        eng._dirty["frontier"] = None
         urls = [r.url for r in batch.orderBy(F.desc("priority"), "url").collect()]
         order.append(urls)
         eng.epoch += 1

@@ -89,6 +89,19 @@ def test_harness_is_dtype_sensitive(ddb):
 QUERY_NAMES = sorted(entry_mod.oracle_sql())
 
 
+def test_oracle_backed_queries_come_first():
+    """Every oracle-backed entry precedes every rows-only one, so a
+    correctness run that checks a prefix of queries() covers all the
+    oracle-backed entries first."""
+    names = list(entry_mod.queries())
+    oracles = entry_mod.oracle_sql()
+    flags = [n in oracles for n in names]
+    assert sum(flags) == len(oracles)
+    assert flags == sorted(flags, reverse=True), [
+        n for n, f in zip(names, flags) if not f
+    ]
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, ddb, name):
     q = entry_mod.queries()[name]

@@ -1686,6 +1686,7 @@ def test_c4_filters_rules(spark):
         (5, "enable javascript to view this page now.\n" + good),  # js line dropped
         (6, None),
         (7, ""),
+        (8, "a closing brace } alone is code.\n" + good),   # brace
     ]
     out = {
         r["doc_id"]: r
@@ -1702,6 +1703,7 @@ def test_c4_filters_rules(spark):
     assert out[1]["n_lines_kept"] == 2
     assert out[2]["reason"] == "lorem_ipsum"
     assert out[3]["reason"] == "brace"
+    assert not out[8]["keep"] and out[8]["reason"] == "brace"
     assert out[4]["reason"] == "blocklist"
     # the javascript line drops but the doc survives on the others
     assert not out[5]["keep"] and out[5]["reason"] == "too_few_lines"

@@ -243,3 +243,27 @@ def test_anchor_topk_is_group_limited_pre_shuffle(spark):
     p = _plan(out)
     assert "WindowGroupLimit" in p and "Partial" in p
     assert out.groupBy("dst_url").count().agg({"count": "max"}).first()[0] <= 3
+
+
+def test_url_filter_blocked_host_join_has_no_forced_broadcast(spark):
+    """The blocked-host dimension is data-dependent (every batch host
+    can be blocked), so its join back onto the urls carries NO
+    broadcast hint — AQE decides at runtime. The caller's blocklist
+    keeps its hint on the suffix semi-join."""
+    from crawler_spark.functions import extract
+
+    urls = spark.createDataFrame(
+        [("https://a.evil.test/x",), ("https://ok.test/",)], "url string"
+    )
+    blocked = spark.createDataFrame([("EVIL.test",)], "domain string")
+    out = extract.url_filter(urls, blocked)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    joins = [l for l in plan.splitlines() if "Join " in l]
+    outer = [l for l in joins if "LeftOuter" in l]
+    semi = [l for l in joins if "LeftSemi" in l]
+    assert len(outer) == 1 and "strategy=broadcast" not in outer[0]
+    assert len(semi) == 1 and "strategy=broadcast" in semi[0]
+    assert sorted((r.url, r.reason) for r in out.collect()) == [
+        ("https://a.evil.test/x", "blocked_domain"),
+        ("https://ok.test/", None),
+    ]
